@@ -16,7 +16,6 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from meta_frame_spark import aggregate_and_join, nested_aggregate, run_pipeline
 
@@ -1753,10 +1752,6 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return minhash_lsh_dedup(
         _t(spark, sf_dir, "documents"), threshold=0.5, num_hashes=64, num_bands=32,
         shingle_n=3,
-        # candidate docs are ~10% of this corpus — the semi-join
-        # restriction's extra blocking stages cost more than they
-        # prune; at cluster scale (candidates ≪ corpus) flip to True
-        restrict_to_candidates=False,
     )
 
 
@@ -1779,7 +1774,6 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     pairs = minhash_lsh_dedup(
         docs, threshold=0.9, num_hashes=64, num_bands=16, shingle_n=3,
-        restrict_to_candidates=False,
     )
     sig = simhash(docs)
     sa = sig.select(F.col("doc_id").alias("id_a"), F.col("simhash").alias("_sig_a"))
@@ -1938,7 +1932,6 @@ def q_dup_graph_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     pairs = minhash_lsh_dedup(
         docs, threshold=0.5, num_hashes=64, num_bands=32, shingle_n=3,
-        restrict_to_candidates=False,
     )
     # Bounded driver census (r15, VERDICT r14 "Next round" #8 — the
     # dup_clusters / pagerank pattern, guide §1.2/§5): the verified
@@ -1949,7 +1942,11 @@ def q_dup_graph_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the driver; the derived columns go through the SAME Spark
     # expressions (sum/2 cast, round(avg, 6)) so every value is
     # bit-identical to the operators'. Larger graphs take the
-    # distributed operators unchanged.
+    # distributed operators unchanged. The pairs are persisted BEFORE
+    # the gate: limit cannot push below the LSH joins, so the gate's
+    # scan would otherwise derive the pairs once more for the
+    # distributed branch (gate, census and triangles all consume them).
+    pairs = pairs.persist()
     rows = pairs.select("id_a", "id_b").limit(100_001).collect()
     if len(rows) <= 100_000:
         from collections import defaultdict
@@ -1979,6 +1976,7 @@ def q_dup_graph_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )],
                 "n_nodes long, _sumdeg long, max_degree long, n_triangles long",
             )
+            pairs.unpersist()
             return base.select(
                 "n_nodes",
                 (F.col("_sumdeg") / 2).cast("long").alias("n_edges"),
@@ -1986,7 +1984,6 @@ def q_dup_graph_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.round(F.col("_sumdeg") / F.col("n_nodes"), 6).alias("avg_degree"),
                 "n_triangles",
             )
-    pairs = pairs.persist()  # census + triangles both consume it
     e = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     return degree_stats(e).crossJoin(triangle_count(e))
 
@@ -2009,44 +2006,10 @@ def q_dup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     pairs = minhash_lsh_dedup(
         docs, threshold=0.5, num_hashes=64, num_bands=32, shingle_n=3,
-        restrict_to_candidates=False,
     )
-    # Bounded driver rollup (r15, same gate as dup_clusters/VERDICT #8):
-    # below the 100k-pair bound the cluster labels are already a driver
-    # dict, so the per-cluster size census is a Counter over union-find
-    # roots — the distributed groupBy over the tiny local label frame
-    # (one more scheduled exchange job) disappears. Larger graphs take
-    # dup_clusters' distributed loop + groupBy unchanged.
-    rows = pairs.select("id_a", "id_b").limit(100_001).collect()
-    if len(rows) <= 100_000:
-        parent: dict = {}
-
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for r in rows:
-            a, b = r[0], r[1]
-            parent.setdefault(a, a)
-            parent.setdefault(b, b)
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                lo, hi = (ra, rb) if ra < rb else (rb, ra)
-                parent[hi] = lo
-        from collections import Counter
-
-        sizes = Counter(find(n) for n in parent)
-        schema = T.StructType([
-            pairs.select(F.col("id_a").alias("cluster")).schema.fields[0],
-            T.StructField("n_nodes", T.LongType(), False),
-        ])
-        return spark.createDataFrame(
-            [(c, n) for c, n in sizes.items()], schema
-        )
-    clusters = dup_clusters(pairs, driver_threshold=0)
-    return clusters.groupBy("cluster").agg(
+    # dup_clusters gates small pair graphs to its bounded driver
+    # union-find itself; only larger graphs take the distributed loop
+    return dup_clusters(pairs).groupBy("cluster").agg(
         F.count(F.lit(1)).alias("n_nodes")
     )
 
@@ -2092,7 +2055,6 @@ def q_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "split")
     pairs = minhash_lsh_dedup(
         docs, threshold=0.5, num_hashes=64, num_bands=32, shingle_n=3,
-        restrict_to_candidates=False,
     )
     return cross_split_leakage(pairs, splits)
 
@@ -3196,7 +3158,6 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     pairs = minhash_lsh_dedup(
         docs, threshold=0.5, num_hashes=64, num_bands=32, shingle_n=3,
-        restrict_to_candidates=False,
     )
     kept = keep_best_per_cluster(docs, pairs, priority="n_chars")
     return kept.select("doc_id", "n_chars")

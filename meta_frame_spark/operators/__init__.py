@@ -27,7 +27,6 @@ from meta_frame_spark.operators.dedup import (
     drop_near_duplicates,
     dup_clusters,
     exact_dedup,
-    hashed_jaccard_pairs,
     keep_best_per_cluster,
     minhash_lsh_candidates,
     minhash_lsh_dedup,
@@ -415,7 +414,6 @@ __all__ = [
     "novelty_score",
     "doremi_domain_weights",
     "hash_split",
-    "hashed_jaccard_pairs",
     "heavy_hitters",
     "keep_best_per_cluster",
     "key_skew_report",

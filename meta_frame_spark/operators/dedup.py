@@ -165,6 +165,65 @@ def _np_shingle_hashes(arr: "np.ndarray", n: int) -> "np.ndarray":
     return h & np.int64(_MERSENNE)
 
 
+def _perm_coefs(num_hashes: int, seed: int) -> tuple[np.ndarray, np.ndarray]:
+    """Seeded coefficients (a, b) of the ``num_hashes`` permutations
+    ``(a*h + b) mod P``."""
+    import random
+
+    rng = random.Random(seed)
+    coefs = [(rng.randrange(1, _MERSENNE), rng.randrange(0, _MERSENNE)) for _ in range(num_hashes)]
+    return (
+        np.array([a for a, _ in coefs], dtype=np.int64),
+        np.array([b for _, b in coefs], dtype=np.int64),
+    )
+
+
+def _sig_and_set(
+    df: DataFrame, text_col: str, id_col: str, num_hashes: int, shingle_n: int, seed: int
+) -> DataFrame:
+    """(id, signature, sh): the MinHash signature and the distinct
+    hashed-shingle set of every doc, from ONE Arrow-batched UDF.
+
+    Hybrid JVM/Arrow split (the measured-fast shape): tokens are
+    hashed JVM-side (codegen'd xxhash64, one call per token — shingle
+    *strings* are never built; their construction was the measured
+    bottleneck), then shingle-hash windows, the dense (shingles ×
+    num_hashes) permutation/min arithmetic and the set dedup run as
+    vectorized numpy. Map-only — no shuffle. Null text yields null
+    signature and set; a doc with no tokens gets the all-P signature
+    and an empty set."""
+    A, B = _perm_coefs(num_hashes, seed)
+    P = np.int64(_MERSENNE)
+    empty_sig = np.full(num_hashes, _MERSENNE, dtype=np.int64)
+
+    @F.pandas_udf("signature array<bigint>, sh array<bigint>")
+    def _both(hs: pd.Series) -> pd.DataFrame:
+        sig_out, set_out = [], []
+        for h in hs:
+            if h is None:
+                sig_out.append(None)
+                set_out.append(None)
+                continue
+            arr = np.asarray(h, dtype=np.int64)
+            if arr.size == 0:
+                sig_out.append(empty_sig)
+                set_out.append(np.array([], dtype=np.int64))
+                continue
+            sh = _np_shingle_hashes(arr, shingle_n)
+            # sh < 2^31 and a < 2^31, so a*sh+b < 2^62: no overflow
+            sig_out.append(((sh[:, None] * A + B) % P).min(axis=0))
+            set_out.append(np.unique(sh))
+        return pd.DataFrame({"signature": sig_out, "sh": set_out})
+
+    # the signature arithmetic is CPU-bound per row — fan a coarse
+    # input out to all cores (no-op on well-partitioned inputs)
+    return (
+        ensure_min_partitions(df)
+        .select(F.col(id_col), _both(_token_hashes(text_col)).alias("s"))
+        .select(id_col, F.col("s.signature").alias("signature"), F.col("s.sh").alias("sh"))
+    )
+
+
 def minhash_signatures(
     df: DataFrame,
     text_col: str = "text",
@@ -176,45 +235,30 @@ def minhash_signatures(
     """(id, signature array<bigint>) — minhash over word shingles.
 
     Each of the ``num_hashes`` permutations is ``(a*h + b) mod P`` over
-    ``xxhash64`` of the shingle (masked to 31 bits); the signature
-    element is the min over shingles.
-
-    Hybrid JVM/Arrow split (the measured-fast shape): tokens are
-    hashed JVM-side (codegen'd xxhash64, one call per token — shingle
-    *strings* are never built; their construction was the measured
-    bottleneck), then shingle-hash windows and the dense (shingles ×
-    num_hashes) permutation/min arithmetic run as vectorized numpy
-    inside one Arrow-batched pandas UDF. Map-only — no shuffle.
+    a 31-bit hash of the shingle; the signature element is the min over
+    shingles. The signature projection of :func:`_sig_and_set`, so it
+    equals the signatures :func:`minhash_lsh_dedup` bands.
     """
-    import random
+    return _sig_and_set(df, text_col, id_col, num_hashes, shingle_n, seed).select(
+        id_col, "signature"
+    )
 
-    rng = random.Random(seed)
-    coefs = [(rng.randrange(1, _MERSENNE), rng.randrange(0, _MERSENNE)) for _ in range(num_hashes)]
-    A = np.array([a for a, _ in coefs], dtype=np.int64)
-    B = np.array([b for _, b in coefs], dtype=np.int64)
-    P = np.int64(_MERSENNE)
-    empty_sig = np.full(num_hashes, _MERSENNE, dtype=np.int64)
 
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def _sig(hs: pd.Series) -> pd.Series:
-        out = []
-        for h in hs:
-            if h is None:  # null text -> null signature (as the pure
-                out.append(None)  # expression form null-propagated)
-                continue
-            arr = np.asarray(h, dtype=np.int64)
-            if arr.size == 0:
-                out.append(empty_sig)
-                continue
-            sh = _np_shingle_hashes(arr, shingle_n)
-            # sh < 2^31 and a < 2^31, so a*sh+b < 2^62: no overflow
-            out.append(((sh[:, None] * A + B) % P).min(axis=0))
-        return pd.Series(out)
-
-    # the signature arithmetic is CPU-bound per row — fan a coarse
-    # input out to all cores (no-op on well-partitioned inputs)
-    return ensure_min_partitions(df).select(
-        F.col(id_col), _sig(_token_hashes(text_col)).alias("signature")
+def _band_rows(df: DataFrame, id_col: str, num_bands: int, rows_per_band: int) -> DataFrame:
+    """(id, band, bucket): one row per band of each doc's ``signature``
+    — docs agreeing on all ``rows_per_band`` rows of a band share its
+    bucket hash."""
+    bands = F.array(
+        *[
+            F.struct(
+                F.lit(b).alias("band"),
+                F.hash(F.slice("signature", b * rows_per_band + 1, rows_per_band)).alias("bucket"),
+            )
+            for b in range(num_bands)
+        ]
+    )
+    return df.select(F.col(id_col), F.explode(bands).alias("bb")).select(
+        id_col, "bb.band", "bb.bucket"
     )
 
 
@@ -223,7 +267,6 @@ def minhash_lsh_candidates(
     id_col: str = "doc_id",
     num_bands: int = 16,
     rows_per_band: int = 4,
-    input_cached: bool = False,
 ) -> DataFrame:
     """Candidate near-dup pairs via banding: docs agreeing on all rows of
     any band land in the same bucket; self-join per bucket.
@@ -235,24 +278,13 @@ def minhash_lsh_candidates(
 
     The exploded bucket table feeds BOTH sides of the self-join, so it
     is persisted (memory-and-disk) — otherwise Spark computes the
-    signature stage twice, once per join branch. Pass
-    ``input_cached=True`` when ``sig_df`` is already persisted: the
-    explode itself is cheap JVM hash/slice work, so recomputing it per
-    join branch from the cache beats materializing a second cache.
+    signature stage twice, once per join branch. When ``sig_df`` is
+    itself persisted the explode is cheap JVM hash/slice work, so it is
+    recomputed per join branch from that cache instead of materializing
+    a second one.
     """
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.hash(F.slice("signature", b * rows_per_band + 1, rows_per_band)).alias("bucket"),
-            )
-            for b in range(num_bands)
-        ]
-    )
-    exploded = sig_df.select(
-        F.col(id_col), F.explode(bands).alias("bb")
-    ).select(id_col, "bb.band", "bb.bucket")
-    if not input_cached:
+    exploded = _band_rows(sig_df, id_col, num_bands, rows_per_band)
+    if not sig_df.is_cached:
         exploded = track(exploded.persist())
 
     left = exploded.alias("l")
@@ -270,6 +302,27 @@ def minhash_lsh_candidates(
         .distinct()
     )
     return pairs
+
+
+def _verify_jaccard(
+    joined: DataFrame,
+    sh_a: str,
+    sh_b: str,
+    threshold: float,
+    keep: tuple[str, str] = ("id_a", "id_b"),
+) -> DataFrame:
+    """Exact set Jaccard ``|A∩B| / |A∪B|`` of the set columns ``sh_a``
+    and ``sh_b`` on candidate rows that already carry both sets; keeps
+    rows reaching ``threshold`` as ``(*keep, jaccard)``, jaccard rounded
+    to 4 places."""
+    return (
+        joined.withColumn(
+            "jaccard",
+            F.size(F.array_intersect(sh_a, sh_b)) / F.size(F.array_union(sh_a, sh_b)),
+        )
+        .filter(F.col("jaccard") >= threshold)
+        .select(*keep, F.round("jaccard", 4).alias("jaccard"))
+    )
 
 
 def ngram_jaccard_pairs(
@@ -292,17 +345,7 @@ def ngram_jaccard_pairs(
     )
     a = sets_df.withColumnRenamed(id_col, "id_a").withColumnRenamed("sh", "sh_a")
     b = sets_df.withColumnRenamed(id_col, "id_b").withColumnRenamed("sh", "sh_b")
-    return (
-        candidates.join(a, "id_a")
-        .join(b, "id_b")
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("sh_a", "sh_b"))
-            / F.size(F.array_union("sh_a", "sh_b")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", F.round("jaccard", 4).alias("jaccard"))
-    )
+    return _verify_jaccard(candidates.join(a, "id_a").join(b, "id_b"), "sh_a", "sh_b", threshold)
 
 
 def containment_pairs(
@@ -356,109 +399,6 @@ def containment_pairs(
     )
 
 
-def hashed_jaccard_pairs(
-    df: DataFrame,
-    candidates: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_n: int = 5,
-    threshold: float = 0.8,
-    restrict_to_candidates: bool = True,
-) -> DataFrame:
-    """Exact Jaccard over candidate pairs computed on hashed shingles
-    (same token-hash mixing as :func:`minhash_signatures`) instead of
-    the shingle strings.
-
-    Identical values to :func:`ngram_jaccard_pairs` barring hash
-    collisions (negligible at any realistic shingle-set size), but the
-    per-doc set is an array<bigint> — far cheaper to build, shuffle and
-    intersect than string arrays. The set table is (a) restricted to
-    docs that actually appear in a candidate pair (semi-join — at scale
-    candidates ≪ corpus) and (b) persisted, because it feeds both join
-    branches. ``candidates`` itself also has two consumers when
-    restricting (the id restriction and the final pair join), so it is
-    persisted too — otherwise the upstream LSH pipeline executes twice.
-
-    ``restrict_to_candidates=False`` skips the semi-join and builds
-    sets for the whole corpus: fewer blocking stages, the right trade
-    when candidates are NOT much rarer than docs (small corpora, low
-    thresholds). Keep the default for the 100 TB shape, where
-    candidate docs ≪ corpus and the semi-join prunes almost all of the
-    set-building work."""
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def _shingle_set(hs: pd.Series) -> pd.Series:
-        return pd.Series([
-            None if h is None else (
-                np.unique(_np_shingle_hashes(np.asarray(h, dtype=np.int64), shingle_n))
-                if len(h) else np.array([], dtype=np.int64)
-            )
-            for h in hs
-        ])
-
-    base = df
-    if restrict_to_candidates:
-        candidates = track(candidates.persist())
-        ids = (
-            candidates.select(F.col("id_a").alias(id_col))
-            .union(candidates.select(F.col("id_b").alias(id_col)))
-            .distinct()
-        )
-        base = df.join(ids, id_col, "left_semi")
-
-    sets_df = track(ensure_min_partitions(base).select(
-        F.col(id_col), _shingle_set(_token_hashes(text_col)).alias("sh")
-    ).persist())
-    a = sets_df.withColumnRenamed(id_col, "id_a").withColumnRenamed("sh", "sh_a")
-    b = sets_df.withColumnRenamed(id_col, "id_b").withColumnRenamed("sh", "sh_b")
-    return (
-        candidates.join(a, "id_a")
-        .join(b, "id_b")
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("sh_a", "sh_b"))
-            / F.size(F.array_union("sh_a", "sh_b")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", F.round("jaccard", 4).alias("jaccard"))
-    )
-
-
-def _minhash_sig_and_set(num_hashes: int, shingle_n: int, seed: int):
-    """One Arrow-batched UDF emitting BOTH the minhash signature and the
-    distinct hashed-shingle set from per-token hashes — the fused form
-    used when the verify stage will need sets for (almost) every doc
-    anyway, so tokenize+hash runs once instead of once per stage."""
-    import random
-
-    rng = random.Random(seed)
-    coefs = [(rng.randrange(1, _MERSENNE), rng.randrange(0, _MERSENNE)) for _ in range(num_hashes)]
-    A = np.array([a for a, _ in coefs], dtype=np.int64)
-    B = np.array([b for _, b in coefs], dtype=np.int64)
-    P = np.int64(_MERSENNE)
-    empty_sig = np.full(num_hashes, _MERSENNE, dtype=np.int64)
-
-    @F.pandas_udf("signature array<bigint>, sh array<bigint>")
-    def _both(hs: pd.Series) -> pd.DataFrame:
-        sig_out, set_out = [], []
-        for h in hs:
-            if h is None:
-                sig_out.append(None)
-                set_out.append(None)
-                continue
-            arr = np.asarray(h, dtype=np.int64)
-            if arr.size == 0:
-                sig_out.append(empty_sig)
-                set_out.append(np.array([], dtype=np.int64))
-                continue
-            sh = _np_shingle_hashes(arr, shingle_n)
-            sig_out.append(((sh[:, None] * A + B) % P).min(axis=0))
-            set_out.append(np.unique(sh))
-        return pd.DataFrame({"signature": sig_out, "sh": set_out})
-
-    return _both
-
-
 def minhash_lsh_dedup(
     df: DataFrame,
     text_col: str = "text",
@@ -468,55 +408,24 @@ def minhash_lsh_dedup(
     shingle_n: int = 5,
     threshold: float = 0.8,
     seed: int = 42,
-    restrict_to_candidates: bool = True,
 ) -> DataFrame:
     """Full near-dup pipeline: minhash -> LSH candidates -> exact
-    Jaccard verify (hashed-shingle sets). Returns verified near-dup
+    Jaccard verify on hashed-shingle sets. Returns verified near-dup
     pairs (id_a, id_b, jaccard).
 
-    ``restrict_to_candidates``: True (default) runs signature and
-    verify as separate text passes so set-building can be semi-join
-    pruned to candidate docs — the winning trade at cluster scale,
-    where candidates ≪ corpus (see :func:`hashed_jaccard_pairs`).
-    False fuses both text passes into ONE Arrow UDF emitting
-    (signature, shingle-set) and persists that single base: buckets
-    derive from the cached signature JVM-side and the verify joins
-    sets from the same cache — half the tokenize+hash work and one
-    persist instead of two, the winning trade when candidates are NOT
-    much rarer than docs (small corpora, low thresholds)."""
-    rows_per_band = num_hashes // num_bands
-    if restrict_to_candidates:
-        sigs = minhash_signatures(df, text_col, id_col, num_hashes, shingle_n, seed)
-        cands = minhash_lsh_candidates(sigs, id_col, num_bands, rows_per_band)
-        return hashed_jaccard_pairs(
-            df, cands, text_col, id_col, shingle_n, threshold,
-            restrict_to_candidates=True,
-        )
-
-    both = _minhash_sig_and_set(num_hashes, shingle_n, seed)
-    base = track(
-        ensure_min_partitions(df)
-        .select(F.col(id_col), both(_token_hashes(text_col)).alias("s"))
-        .select(id_col, F.col("s.signature").alias("signature"), F.col("s.sh").alias("sh"))
-        .persist()
-    )
-    cands = minhash_lsh_candidates(
-        base.select(id_col, "signature"), id_col, num_bands, rows_per_band,
-        input_cached=True,
-    )
+    One text pass: a single Arrow UDF emits each doc's (signature,
+    shingle-set) and that base is persisted once. Band buckets derive
+    from the cached signatures JVM-side and the verify joins both
+    sides' sets from the same cache. The values equal
+    :func:`ngram_jaccard_pairs` over the same candidates barring 31-bit
+    shingle-hash collisions (negligible at any realistic set size),
+    while an array<bigint> set is far cheaper to build, shuffle and
+    intersect than shingle strings."""
+    base = track(_sig_and_set(df, text_col, id_col, num_hashes, shingle_n, seed).persist())
+    cands = minhash_lsh_candidates(base, id_col, num_bands, num_hashes // num_bands)
     a = base.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"))
     b = base.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"))
-    return (
-        cands.join(a, "id_a")
-        .join(b, "id_b")
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("sh_a", "sh_b"))
-            / F.size(F.array_union("sh_a", "sh_b")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", F.round("jaccard", 4).alias("jaccard"))
-    )
+    return _verify_jaccard(cands.join(a, "id_a").join(b, "id_b"), "sh_a", "sh_b", threshold)
 
 
 def near_dedup_against(
@@ -545,57 +454,36 @@ def near_dedup_against(
     batches. Verify joins sets only for candidate pairs; survivors
     return via a left-anti join on flagged batch ids.
 
-    Both per-side band tables are persisted (each feeds the bucket
-    join and, for candidates, the verify join); corpus ids must share
+    Both per-side (signature, set) bases are persisted (each feeds the
+    bucket join and, for candidates, the verify join); corpus ids must share
     ``id_col``'s type with the batch but may overlap batch ids —
     pairs are (batch_id, corpus_id), never canonicalized.
     """
     rows_per_band = num_hashes // num_bands
-    both = _minhash_sig_and_set(num_hashes, shingle_n, seed)
 
     def prep(df: DataFrame, tag: str) -> DataFrame:
         return track(
-            ensure_min_partitions(df)
-            .select(F.col(id_col), both(_token_hashes(text_col)).alias("s"))
+            _sig_and_set(df, text_col, id_col, num_hashes, shingle_n, seed)
             .select(
                 F.col(id_col).alias(f"{tag}_id"),
-                F.col("s.signature").alias("signature"),
-                F.col("s.sh").alias(f"sh_{tag}"),
+                "signature",
+                F.col("sh").alias(f"sh_{tag}"),
             )
             .persist()
         )
 
-    bands = F.array(*[
-        F.struct(
-            F.lit(b).alias("band"),
-            F.hash(
-                F.slice("signature", b * rows_per_band + 1, rows_per_band)
-            ).alias("bucket"),
-        )
-        for b in range(num_bands)
-    ])
-
-    def buckets(prepped: DataFrame, tag: str) -> DataFrame:
-        return prepped.select(
-            f"{tag}_id", F.explode(bands).alias("bb")
-        ).select(f"{tag}_id", "bb.band", "bb.bucket")
-
     b_prep, c_prep = prep(batch, "batch"), prep(corpus, "corpus")
     cands = (
-        buckets(b_prep, "batch")
-        .join(buckets(c_prep, "corpus"), ["band", "bucket"])
+        _band_rows(b_prep, "batch_id", num_bands, rows_per_band)
+        .join(_band_rows(c_prep, "corpus_id", num_bands, rows_per_band), ["band", "bucket"])
         .select("batch_id", "corpus_id")
         .distinct()
     )
+    joined = cands.join(b_prep.select("batch_id", "sh_batch"), "batch_id").join(
+        c_prep.select("corpus_id", "sh_corpus"), "corpus_id"
+    )
     flagged = (
-        cands.join(b_prep.select("batch_id", "sh_batch"), "batch_id")
-        .join(c_prep.select("corpus_id", "sh_corpus"), "corpus_id")
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("sh_batch", "sh_corpus"))
-            / F.size(F.array_union("sh_batch", "sh_corpus")),
-        )
-        .filter(F.col("jaccard") >= threshold)
+        _verify_jaccard(joined, "sh_batch", "sh_corpus", threshold, ("batch_id", "corpus_id"))
         .select(F.col("batch_id").alias(id_col))
         .distinct()
     )

@@ -193,7 +193,6 @@ def test_dup_graph_stats_driver_census_matches_operators(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     pairs = minhash_lsh_dedup(
         docs, threshold=0.5, num_hashes=64, num_bands=32, shingle_n=3,
-        restrict_to_candidates=False,
     ).persist()
     e = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     slow = degree_stats(e).crossJoin(triangle_count(e)).collect()[0]

@@ -242,7 +242,6 @@ def test_release_tracked_caches_drops_operator_persists(spark, sf_dir):
     release_tracked_caches()  # clean slate
     pairs = minhash_lsh_dedup(
         docs, threshold=0.5, num_hashes=16, num_bands=4, shingle_n=3,
-        restrict_to_candidates=False,
     )
     pairs.count()  # materializes the tracked persist
     assert len(_TRACKED) >= 1

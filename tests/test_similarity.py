@@ -146,6 +146,70 @@ def test_dup_clusters_transitive(spark):
     assert kept == [0, 1, 4, 6, 7, 8]  # cluster minima + untouched docs
 
 
+def _planted_near_dup_corpus(spark):
+    """60 random 30-word docs plus planted copies: 1-3 word edits,
+    an appended tail, an exact copy, and a pair of docs shorter than
+    any shingle."""
+    import random
+
+    rng = random.Random(7)
+    vocab = [f"w{i}" for i in range(400)]
+    rows = [(i, rng.choices(vocab, k=30)) for i in range(60)]
+    nxt = 100
+    for src in range(0, 60, 4):
+        words = list(rows[src][1])
+        for _ in range(1 + src % 3):
+            words[rng.randrange(len(words))] = rng.choice(vocab)
+        rows.append((nxt, words))
+        rows.append((nxt + 1, rows[src][1] + rng.choices(vocab, k=3)))
+        nxt += 2
+    rows.append((nxt, rows[1][1]))
+    rows += [(nxt + 1, ["w1", "w2"]), (nxt + 2, ["w1", "w2"])]
+    return spark.createDataFrame(
+        [(i, " ".join(w)) for i, w in rows], "doc_id bigint, text string"
+    )
+
+
+@pytest.mark.parametrize("shingle_n,threshold,num_bands", [(3, 0.5, 32), (5, 0.8, 16)])
+def test_minhash_lsh_dedup_matches_string_shingle_verify(spark, shingle_n, threshold, num_bands):
+    """The fused hashed-shingle pipeline returns exactly the pairs and
+    Jaccard values of string-shingle verification over the same LSH
+    candidates, and banding a persisted signature frame (no internal
+    persist) yields the same candidates as a plain one (tracked
+    persist of the bucket table)."""
+    from meta_frame_spark.operators.cache import _TRACKED, release_tracked_caches
+    from meta_frame_spark.operators.dedup import (
+        minhash_lsh_candidates,
+        minhash_signatures,
+        ngram_jaccard_pairs,
+    )
+
+    df = _planted_near_dup_corpus(spark)
+    release_tracked_caches()
+    sigs = minhash_signatures(df, shingle_n=shingle_n)
+    plain = minhash_lsh_candidates(sigs, num_bands=num_bands, rows_per_band=64 // num_bands)
+    assert len(_TRACKED) == 1
+    cached_sigs = minhash_signatures(df, shingle_n=shingle_n).persist()
+    cached = minhash_lsh_candidates(cached_sigs, num_bands=num_bands, rows_per_band=64 // num_bands)
+    assert len(_TRACKED) == 1
+
+    def as_set(frame):
+        return {tuple(r) for r in frame.collect()}
+
+    assert as_set(plain) == as_set(cached)
+    expected = as_set(ngram_jaccard_pairs(df, plain, shingle_n=shingle_n, threshold=threshold))
+    got = as_set(minhash_lsh_dedup(
+        df, num_bands=num_bands, shingle_n=shingle_n, threshold=threshold
+    ))
+    assert got == expected
+    # every appended-tail copy, the exact copy and the short pair are
+    # found; the edited copies' Jaccard straddles the thresholds
+    planted = {(src, 101 + src // 2) for src in range(0, 60, 4)} | {(1, 130), (131, 132)}
+    assert planted <= {(a, b) for a, b, _ in got}
+    cached_sigs.unpersist()
+    release_tracked_caches()
+
+
 def test_null_text_does_not_crash_dedup(spark):
     """Regression: a NULL text row must null-propagate through minhash,
     simhash and the LSH pipeline, not crash the numpy UDFs."""

@@ -156,43 +156,17 @@ def _v_ann_summary_r14():
     return apply, undo
 
 
-def _v_kn_join_r14():
-    """Restore the r14 join-shaped self-fit branch of both KN fits by
-    forcing the general (non self-fit) branch OFF... not equivalent;
-    instead swap the module functions for copies using the join shape."""
-    from meta_frame_spark.operators import scoring
-    from meta_frame_spark.operators.cache import track
-    from pyspark.sql import functions as F
-
-    new2, new3 = scoring.kneser_ney_logprob, scoring.kneser_ney3_logprob
-    src = open("/tmp/kn_r14_scoring.py").read()
-    ns: dict = {}
-    exec(compile(src, "/tmp/kn_r14_scoring.py", "exec"), ns)
-    old2, old3 = ns["kneser_ney_logprob"], ns["kneser_ney3_logprob"]
-
-    def apply():
-        scoring.kneser_ney_logprob = old2
-        scoring.kneser_ney3_logprob = old3
-
-    def undo():
-        scoring.kneser_ney_logprob = new2
-        scoring.kneser_ney3_logprob = new3
-
-    return apply, undo
-
-
 def _v_dup_driver_r14():
     """Restore the r14 distributed shapes of the dup-family queries:
-    keep_best window path, graph census/triangles operators, cluster-
-    size groupBy. keep_best/dup_clusters flip via driver_threshold=0
-    wrappers; the two query bodies are replaced wholesale."""
+    keep_best window path and graph census/triangles operators. The
+    keep_best operator and the graph-stats query body are replaced
+    wholesale (the cluster-size query already is the r14 shape)."""
     import __spark_entry__ as entrymod
     from meta_frame_spark.operators import dedup as ddp
     from pyspark.sql import functions as F
 
     new_kb = ddp.keep_best_per_cluster
     new_gs = entrymod.q_dup_graph_stats
-    new_cs = entrymod.q_dup_cluster_sizes
 
     def old_kb(df, pairs, priority, id_col="doc_id", tiebreak=None,
                driver_threshold=100_000):
@@ -220,39 +194,23 @@ def _v_dup_driver_r14():
         docs = entrymod._t(spark, sf_dir, "documents")
         pairs = minhash_lsh_dedup(
             docs, threshold=0.5, num_hashes=64, num_bands=32, shingle_n=3,
-            restrict_to_candidates=False,
         ).persist()
         e = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         return degree_stats(e).crossJoin(triangle_count(e))
 
-    def old_cs(spark, sf_dir):
-        from meta_frame_spark.operators.dedup import dup_clusters, minhash_lsh_dedup
-        docs = entrymod._t(spark, sf_dir, "documents")
-        pairs = minhash_lsh_dedup(
-            docs, threshold=0.5, num_hashes=64, num_bands=32, shingle_n=3,
-            restrict_to_candidates=False,
-        )
-        clusters = dup_clusters(pairs)
-        return clusters.groupBy("cluster").agg(
-            F.count(F.lit(1)).alias("n_nodes")
-        )
-
     def apply():
         ddp.keep_best_per_cluster = old_kb
         entrymod.q_dup_graph_stats = old_gs
-        entrymod.q_dup_cluster_sizes = old_cs
 
     def undo():
         ddp.keep_best_per_cluster = new_kb
         entrymod.q_dup_graph_stats = new_gs
-        entrymod.q_dup_cluster_sizes = new_cs
 
     return apply, undo
 
 
 VARIANTS = {
     "ann_summary_r14": _v_ann_summary_r14,
-    "kn_join_r14": _v_kn_join_r14,
     "dup_driver_r14": _v_dup_driver_r14,
 }
 

@@ -71,14 +71,12 @@ def main() -> int:
         r: dict[str, float | int] = {}
 
         t, n = timed("dedup_minhash", lambda: minhash_lsh_dedup(
-            docs(d), threshold=0.5, num_hashes=64, num_bands=16, shingle_n=3,
-            restrict_to_candidates=False).count())
+            docs(d), threshold=0.5, num_hashes=64, num_bands=16, shingle_n=3).count())
         r["dedup_minhash_sec"], r["dedup_minhash_pairs"] = t, n
 
         def clusters():
             pairs = minhash_lsh_dedup(
-                docs(d), threshold=0.5, num_hashes=64, num_bands=32, shingle_n=3,
-                restrict_to_candidates=False)
+                docs(d), threshold=0.5, num_hashes=64, num_bands=32, shingle_n=3)
             # driver_threshold=0: the smoke must exercise the DISTRIBUTED
             # label-propagation loop (raises if non-convergent), not the
             # small-graph union-find shortcut
