@@ -1927,12 +1927,19 @@ def q_dup_graph_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     local sf-sweeps treat this as sf0.01-bounded; the Spark side runs
     fine at every SF and its sf1 pair graph is smoke-checked."""
     from meta_frame_spark.operators.dedup import minhash_lsh_dedup
-    from meta_frame_spark.operators.graph import degree_stats, triangle_count
 
     docs = _t(spark, sf_dir, "documents")
     pairs = minhash_lsh_dedup(
         docs, threshold=0.5, num_hashes=64, num_bands=32, shingle_n=3,
     )
+    return _pair_graph_census(spark, pairs)
+
+
+def _pair_graph_census(spark: SparkSession, pairs: DataFrame) -> DataFrame:
+    """``degree_stats x triangle_count`` over an ``(id_a, id_b)`` pair
+    graph, with a bounded driver short-circuit for small graphs."""
+    from meta_frame_spark.operators.graph import degree_stats, triangle_count
+
     # Bounded driver census (r15, VERDICT r14 "Next round" #8 — the
     # dup_clusters / pagerank pattern, guide §1.2/§5): the verified
     # pair graph is tiny relative to the corpus (LSH banding bounds
@@ -1954,7 +1961,9 @@ def q_dup_graph_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         adj: dict = defaultdict(set)
         for r in rows:
             a, b = r[0], r[1]
-            if a != b:
+            # a null-id pair is no edge: the operators' least/greatest
+            # canonicalization drops it the same way
+            if a is not None and b is not None and a != b:
                 lo, hi = (a, b) if a < b else (b, a)
                 adj[lo].add(hi)
                 adj[hi].add(lo)
@@ -2945,9 +2954,10 @@ def q_group_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BM25 top-20 for a bag-of-words query (operators/search.py):
-    token explode filtered to query terms BEFORE any shuffle, corpus
-    constants broadcast, rank on rounded score so the top-k set is
+    """BM25 top-20 for a bag-of-words query (operators/search.py): the
+    tokenized corpus (memoized across queries on an unchanged corpus)
+    exploded and filtered to the query terms before any shuffle, corpus
+    constants as literals, rank on rounded score so the top-k set is
     engine-stable."""
     from meta_frame_spark.operators.search import bm25_topk
 

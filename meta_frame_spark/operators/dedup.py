@@ -517,12 +517,15 @@ def dup_clusters(
     the threshold — a real 10⁹-pair corpus takes the distributed loop;
     identical output either way (min-reachable-id labels), pinned by
     test. Set ``driver_threshold=0`` to force the distributed path.
+    A pair with a null id is not an edge; both paths drop it first, so
+    the driver's id comparisons never see a null.
 
     Raises ``RuntimeError`` if ``max_iter`` rounds pass without
     convergence (a silent partial result would let duplicates through
     ``drop_near_duplicates`` undetected); raise ``max_iter`` for
     corpora with very long duplicate chains.
     """
+    pairs = pairs.filter(F.col("id_a").isNotNull() & F.col("id_b").isNotNull())
     rows = None
     if driver_threshold:
         # ONE bounded computation decides the path AND feeds the small

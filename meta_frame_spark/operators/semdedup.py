@@ -13,7 +13,10 @@ Scale design (10⁹+ vectors):
 
 * quantizer fit is driver-side on a BOUNDED id-hash-ordered sample
   (``similarity._fit_quantizer`` — the FAISS training recipe);
-* cell assignment is one Arrow-batched map, no shuffle;
+* cell assignment is one Arrow-batched map, no shuffle; fit and
+  assignment come from ``similarity._quantized_corpus``, so the
+  persisted ``(_id, v, cell)`` frame is shared with ``ivf_topk`` and
+  reused across calls on an unchanged corpus;
 * the only shuffle is the groupBy(cell) feeding ``applyInPandas``;
   within a cluster the work is one normalize + one n×n matmul. Cluster
   sizes are corpus/n_clusters on average — size ``n_clusters`` so
@@ -35,8 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from meta_frame_spark.operators.cache import track
-from meta_frame_spark.operators.similarity import _cell_assigner, _fit_quantizer
+from meta_frame_spark.operators.similarity import _quantized_corpus
 
 _OUT_SCHEMA = T.StructType(
     [
@@ -82,17 +84,12 @@ def semantic_dedup(
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
     if max_cell_size is not None and max_cell_size < 1:
         raise ValueError(f"max_cell_size must be >= 1, got {max_cell_size}")
-    corpus_vec = df.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).alias("_id"), F.col(vec_col).alias("v")
-    )
-    centroids = _fit_quantizer(corpus_vec, n_clusters, seed, fit_fraction)
-    assigned = corpus_vec.select(
-        "_id", "v", _cell_assigner(centroids)(F.col("v")).alias("cell")
+    _, assigned = _quantized_corpus(
+        df, id_col, vec_col, n_clusters, seed, fit_fraction
     )
 
     group_keys = ["cell"]
     if max_cell_size is not None:
-        assigned = track(assigned.persist())
         sizes = {
             r["cell"]: r["n"]
             for r in assigned.groupBy("cell").agg(F.count(F.lit(1)).alias("n")).collect()

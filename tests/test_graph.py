@@ -208,3 +208,27 @@ def test_bad_params(spark):
         pagerank(df, n_iter=0)
     with pytest.raises(ValueError):
         pagerank(df, eps=0.0)
+
+
+def test_null_id_pairs_driver_paths_match_distributed(spark):
+    """A pair with a null id is no edge: dup_clusters' driver union-find
+    and q_dup_graph_stats' driver census drop it instead of raising on
+    ``<``, and agree with the distributed operators."""
+    import __spark_entry__ as entrymod
+    from pyspark.sql import functions as F
+
+    from meta_frame_spark.operators.dedup import dup_clusters
+
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 1), (4, None), (None, 4), (None, None), (5, 6)],
+        "id_a bigint, id_b bigint",
+    )
+    driver = sorted(dup_clusters(pairs).collect())
+    assert driver == sorted(dup_clusters(pairs, driver_threshold=0).collect())
+    assert {r.node: r.cluster for r in driver} == {1: 1, 2: 1, 3: 1, 5: 5, 6: 5}
+
+    census = entrymod._pair_graph_census(spark, pairs).collect()[0]
+    e = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+    slow = degree_stats(e).crossJoin(triangle_count(e)).collect()[0]
+    assert census.asDict() == slow.asDict()
+    assert census.n_triangles == 1

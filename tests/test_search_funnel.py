@@ -619,3 +619,82 @@ class TestRake:
             rake_keywords(df, "text", stopwords=[])
         with _pt.raises(ValueError):
             rake_keywords(df, "text", max_phrase_len=0)
+
+
+def _write_docs(spark, path, seed, n=60):
+    import random
+
+    rng = random.Random(seed)
+    vocab = ["spark", "flink", "trino", "duck", "arrow", "lake", "join", "scan"]
+    rows = [(i, " ".join(rng.choice(vocab) for _ in range(rng.randint(1, 9))))
+            for i in range(n)]
+    rows.append((n, ""))  # an empty document still counts toward N and avgdl
+    spark.createDataFrame(rows, "doc_id long, text string") \
+        .write.mode("overwrite").parquet(path)
+
+
+class TestBM25CorpusMemo:
+    QUERY = ["spark", "trino", "lake"]
+
+    @pytest.fixture(autouse=True)
+    def _empty_memo(self):
+        from meta_frame_spark.operators.cache import release_tracked_caches
+
+        release_tracked_caches()
+        yield
+        release_tracked_caches()
+
+    @staticmethod
+    def _load(spark, path):
+        from meta_frame_spark import load_data
+
+        return load_data(spark, source="parquet", path=path)
+
+    def test_second_read_of_one_path_reuses_corpus_state(self, spark, tmp_path):
+        from meta_frame_spark.operators.search import _bm25_corpus
+
+        path = str(tmp_path / "docs.parquet")
+        _write_docs(spark, path, seed=1)
+        d1, d2 = self._load(spark, path), self._load(spark, path)
+        first = bm25_topk(d1, self.QUERY, k=10).collect()
+        assert bm25_topk(d2, self.QUERY, k=10).collect() == first
+        assert _bm25_corpus(d1, "doc_id", "text")[0] is _bm25_corpus(d2, "doc_id", "text")[0]
+
+    def test_rewritten_source_misses_and_matches_fresh_build(self, spark, tmp_path):
+        from meta_frame_spark.operators.cache import release_tracked_caches
+
+        path = str(tmp_path / "docs.parquet")
+        _write_docs(spark, path, seed=1)
+        before = bm25_topk(self._load(spark, path), self.QUERY, k=10).collect()
+        _write_docs(spark, path, seed=2)
+        after = bm25_topk(self._load(spark, path), self.QUERY, k=10).collect()
+        release_tracked_caches()
+        assert after == bm25_topk(self._load(spark, path), self.QUERY, k=10).collect()
+        assert after != before
+
+    def test_nondeterministic_corpus_is_never_memoized(self, spark, tmp_path):
+        from meta_frame_spark.operators.cache import _MEMO
+        from meta_frame_spark.operators.search import _bm25_corpus
+
+        path = str(tmp_path / "docs.parquet")
+        _write_docs(spark, path, seed=1)
+        docs = self._load(spark, path).withColumn("r", F.rand(7))
+        a = _bm25_corpus(docs, "doc_id", "text")[0]
+        assert _bm25_corpus(docs, "doc_id", "text")[0] is not a
+        assert not _MEMO
+
+    def test_release_empties_memo_and_unpersists(self, spark, tmp_path):
+        from pyspark import StorageLevel
+
+        from meta_frame_spark.operators.cache import _MEMO, release_tracked_caches
+        from meta_frame_spark.operators.search import _bm25_corpus
+
+        path = str(tmp_path / "docs.parquet")
+        _write_docs(spark, path, seed=1)
+        docs = self._load(spark, path)
+        bm25_topk(docs, self.QUERY, k=10).collect()
+        lens = _bm25_corpus(docs, "doc_id", "text")[0]
+        assert len(_MEMO) == 1 and lens.storageLevel != StorageLevel.NONE
+        assert release_tracked_caches() >= 1
+        assert not _MEMO and lens.storageLevel == StorageLevel.NONE
+        assert _bm25_corpus(docs, "doc_id", "text")[0] is not lens

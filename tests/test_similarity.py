@@ -357,3 +357,129 @@ def test_embedding_outliers_flags_planted_stray(spark):
     assert len(flagged) < 10  # the tight cloud mostly passes
     stray = next(r for r in out if r.vec_id == 999)
     assert stray.z > 2.0 and stray.dist > 10
+
+
+def _write_vectors(spark, path, seed, n=200, dim=8):
+    rng = np.random.default_rng(seed)
+    rows = [(i, rng.normal(size=dim).tolist()) for i in range(n)]
+    spark.createDataFrame(rows, "vec_id bigint, embedding array<double>") \
+        .write.mode("overwrite").parquet(path)
+
+
+def _ivf_rows(spark, path):
+    from meta_frame_spark import load_data
+    from meta_frame_spark.operators.similarity import ivf_topk
+
+    corpus = load_data(spark, source="parquet", path=path)
+    out = ivf_topk(corpus, corpus.filter(F.col("vec_id") < 10), k=5,
+                   n_cells=4, n_probe=2)
+    return sorted(out.collect())
+
+
+@pytest.fixture
+def fit_calls(monkeypatch):
+    """Counts quantizer fits; starts and ends with an empty corpus memo."""
+    from meta_frame_spark.operators import similarity
+    from meta_frame_spark.operators.cache import release_tracked_caches
+
+    calls = []
+    real = similarity._fit_quantizer
+
+    def counted(*a, **kw):
+        calls.append(1)
+        return real(*a, **kw)
+
+    release_tracked_caches()
+    monkeypatch.setattr(similarity, "_fit_quantizer", counted)
+    yield calls
+    release_tracked_caches()
+
+
+def test_ivf_topk_reuses_quantizer_across_reads_of_one_path(spark, tmp_path, fit_calls):
+    path = str(tmp_path / "corpus.parquet")
+    _write_vectors(spark, path, seed=1)
+    first = _ivf_rows(spark, path)
+    second = _ivf_rows(spark, path)  # a second load_data of the same path
+    assert second == first
+    assert len(fit_calls) == 1
+
+
+def test_ivf_topk_memo_misses_on_rewritten_source(spark, tmp_path, fit_calls):
+    from meta_frame_spark.operators.cache import release_tracked_caches
+
+    path = str(tmp_path / "corpus.parquet")
+    _write_vectors(spark, path, seed=1)
+    before = _ivf_rows(spark, path)
+    _write_vectors(spark, path, seed=2)  # same path, same ids, new vectors
+    after = _ivf_rows(spark, path)
+    assert len(fit_calls) == 2
+    release_tracked_caches()
+    assert after == _ivf_rows(spark, path)  # a fresh build agrees
+    assert after != before
+
+
+def _rand_column(spark, path):
+    from meta_frame_spark import load_data
+
+    return load_data(spark, source="parquet", path=path).withColumn("r", F.rand(7))
+
+
+def _in_subquery(spark, path):
+    # the subquery's relation is not a leaf of the outer plan: rewriting
+    # its table would go unseen by the file digest
+    spark.read.parquet(path).createOrReplaceTempView("memo_corpus")
+    return spark.sql(
+        "SELECT * FROM memo_corpus WHERE vec_id IN "
+        "(SELECT vec_id FROM memo_corpus WHERE vec_id < 150)"
+    )
+
+
+def _in_memory_rows(spark, path):
+    return spark.createDataFrame(spark.read.parquet(path).collect())
+
+
+@pytest.mark.parametrize("make", [_rand_column, _in_subquery, _in_memory_rows])
+def test_ivf_topk_never_memoizes_unfingerprintable_corpus(spark, tmp_path, fit_calls, make):
+    from meta_frame_spark.operators.cache import _MEMO
+    from meta_frame_spark.operators.similarity import ivf_topk
+
+    path = str(tmp_path / "corpus.parquet")
+    _write_vectors(spark, path, seed=1)
+    corpus = make(spark, path)
+    for _ in range(2):
+        ivf_topk(corpus, corpus.filter(F.col("vec_id") < 10), k=5,
+                 n_cells=4, n_probe=2).collect()
+    assert len(fit_calls) == 2
+    assert not _MEMO
+
+
+def test_ivf_topk_memo_misses_on_new_modification_time(spark, tmp_path, fit_calls):
+    """A file rewritten in place under its old name (as non-Spark writers
+    do) must miss even when its length is unchanged."""
+    import os
+
+    path = str(tmp_path / "corpus.parquet")
+    _write_vectors(spark, path, seed=1)
+    first = _ivf_rows(spark, path)
+    for name in os.listdir(path):
+        f = os.path.join(path, name)
+        os.utime(f, (os.stat(f).st_atime, os.stat(f).st_mtime + 60))
+    assert _ivf_rows(spark, path) == first
+    assert len(fit_calls) == 2
+
+
+def test_release_tracked_caches_empties_corpus_memo(spark, tmp_path, fit_calls):
+    from pyspark import StorageLevel
+
+    from meta_frame_spark.operators.cache import _MEMO, release_tracked_caches
+
+    path = str(tmp_path / "corpus.parquet")
+    _write_vectors(spark, path, seed=1)
+    _ivf_rows(spark, path)
+    frames = [f for _, _, fs in _MEMO.values() for f in fs]
+    assert len(frames) == 1 and frames[0].storageLevel != StorageLevel.NONE
+    assert release_tracked_caches() >= 1
+    assert not _MEMO
+    assert frames[0].storageLevel == StorageLevel.NONE
+    _ivf_rows(spark, path)
+    assert len(fit_calls) == 2  # released state is rebuilt, not reused
